@@ -22,15 +22,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -43,9 +34,26 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // A failed query is never silent: its name, exception class and first
+    // message line go to <out>/_failures.json (`[]` when none), every
+    // other output is still written, and the run exits 1.
+    val failures = SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .toSeq.flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+          System.err.println(s"[verify] $name failed: ${e.getClass.getName}: $msg")
+          Some(s"""{"name": ${q(name)}, "class": ${q(e.getClass.getName)}, "message": ${q(msg)}}""")
+        }
+      }
+    Files.writeString(Paths.get(s"$outDir/_failures.json"), failures.mkString("[", ",\n", "]"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   *     node keys (no cross product anywhere).
   *
   * The graph itself: parts are linked when they co-occur in an order
-  * (lineitem self-join on l_orderkey). Per-order fan-out is bounded by
-  * the order's line count (≤7 in TPC-H-shaped data), so edge
-  * construction is linear in lineitem with one orderkey-keyed shuffle.
+  * ([[Baskets]]: one orderkey-keyed aggregate, pairs exploded in-row).
+  * Per-order fan-out is bounded by the order's line count (≤7 in
+  * TPC-H-shaped data), so edge construction is linear in lineitem with
+  * one orderkey-keyed shuffle.
   */
 object Graph {
 
@@ -55,73 +56,52 @@ object Graph {
     * a parameter. */
   private val Rounds = 3
 
-  /** Distinct (order, part) pairs — collapses duplicate lines of the same
-    * part inside one order before the self-join. */
-  private def orderParts(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .distinct()
-
-  /** Directed co-occurrence edges (both directions), deduplicated.
-    * Aggregate-built like [[undirected]] (optimization r16): one
-    * ok-keyed collect_set exchange (map-side dedup) + bounded in-row
-    * ordered-pair explode + the edge distinct — one fewer E-multiset
-    * exchange than the former distinct + self-join pipeline. */
+  /** Directed co-occurrence edges (both directions), deduplicated. */
   private def coEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(ps,
-          |  x -> transform(filter(ps, y -> y != x),
-          |    y -> struct(x AS src, y AS dst))))""".stripMargin)).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    Baskets.edges(s, dir, "src", "dst", ordered = true)
 
-  private def pagerankOracle: String = {
-    // r_{k+1}(v) = 0.15 + 0.85 * sum_{u->v} r_k(u)/outdeg(u), fixed-point
-    // integers throughout; LEFT JOIN keeps isolated-direction nodes (none
-    // exist in a symmetrized graph, but the shape is total regardless).
-    val rounds = (1 to Rounds).map { k =>
+  /** The x59/x148 oracle prefix: [[Rounds]] integer rounds
+    * r_{k+1}(v) = share(v, 0.15) + 0.85 * sum_{u->v} r_k(u)/outdeg(u);
+    * the LEFT JOIN keeps every node. `share(node, mass)` is the SQL twin
+    * of [[ranks]]' teleport. */
+  private def rankCtes(share: (String, String) => String): String = {
+    val rounds = GraphSql.unroll(Rounds) { k =>
       s"""r$k AS MATERIALIZED (
          |  SELECT d.src AS v,
-         |    ${RScale * 15 / 100} + ($DampNum * COALESCE(s.m, 0)) // 100 AS r
+         |    ${share("d.src", s"${RScale * 15 / 100}")} + ($DampNum * COALESCE(s.m, 0)) // 100 AS r
          |  FROM deg d LEFT JOIN (
          |    SELECT p.dst, SUM(r.r // g.d) AS m
          |    FROM pairs p JOIN r${k - 1} r ON p.src = r.v
          |    JOIN deg g ON g.src = p.src
          |    GROUP BY p.dst) s ON d.src = s.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
+    }
+    s"""${GraphSql.pairs},
        |deg AS MATERIALIZED (
        |  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM pairs GROUP BY 1),
        |r0 AS MATERIALIZED (
-       |  SELECT src AS v, CAST($RScale AS BIGINT) AS r FROM deg),
-       |$rounds
-       |SELECT v AS part, CAST(r AS BIGINT) AS pr
-       |FROM r$Rounds ORDER BY pr DESC, part LIMIT 100""".stripMargin
+       |  SELECT src AS v, ${share("src", s"CAST($RScale AS BIGINT)")} AS r FROM deg),
+       |$rounds""".stripMargin
   }
 
-  /** Full (part, pr) rank table after [[Rounds]] synchronous rounds —
-    * the registered query takes its deterministic top-100; specs read the
-    * whole table (mass conservation is a global invariant). */
-  def pagerankFull(s: SparkSession, dir: String): DataFrame = {
+  /** The one PageRank body of x59 and x148: [[Rounds]] synchronous
+    * rounds as a lazy fold over a round-invariant degree-annotated
+    * adjacency, joined ONCE and checkpointed, so each round is
+    * adj ⋈ ranks + the dst aggregation. `teleport(node, mass)` is a
+    * node's share of a teleport mass (x59: every node; x148: the seeds
+    * only). `finish` shapes the final (v, r) ranks; its result is
+    * materialized before the edge/degree checkpoints (E rows) are
+    * released — repeated invocations (a probe's warm+timed runs, a
+    * bench's reps) otherwise ACCUMULATE E-row block-manager generations
+    * per call, the storage-pressure tail the round-11 20× probe OOM'ed
+    * on. */
+  private def ranks(s: SparkSession, dir: String, teleport: (Column, Long) => Column)(
+      finish: DataFrame => DataFrame): DataFrame = {
     val pairs = coEdges(s, dir).localCheckpoint() // degree agg + the adj build
     val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("d")).localCheckpoint()
-    // Round-invariant degree-annotated adjacency (optimization r16):
-    // joined ONCE and checkpointed, so each round is adj ⋈ ranks + the
-    // dst aggregation — the former per-round pairs ⋈ deg pass over E
-    // rows is paid a single time.
     val adj = pairs.join(broadcast(deg), "src").localCheckpoint()
     pairs.unpersist() // adj supersedes the raw edge checkpoint
-    var ranks = deg.select(col("src").as("v"), lit(RScale).as("r"))
-    for (_ <- 1 to Rounds) {
+    val r0 = deg.select(col("src").as("v"), teleport(col("src"), RScale).as("r"))
+    val last = (1 to Rounds).foldLeft(r0) { (ranks, _) =>
       val contrib = adj
         .join(broadcast(ranks), col("src") === col("v"))
         .select(col("dst"), expr("r div d").as("c"))
@@ -130,25 +110,25 @@ object Graph {
         // into one hub's in-neighbor sum; DuckDB widens SUM to HUGEINT
         // silently, so decimal is also the parity-preserving choice.
         .groupBy(col("dst")).agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      ranks = deg
+      deg
         .select(col("src").as("v"))
         .join(contrib, col("v") === col("dst"), "left")
         .select(col("v"),
-          (lit(RScale * 15 / 100) + expr(
+          (teleport(col("v"), RScale * 15 / 100) + expr(
             s"CAST(($DampNum * coalesce(m, CAST(0 AS DECIMAL(38,0)))) div 100 AS BIGINT)"))
             .as("r"))
     }
-    // Materialize the final ranks (N rows) and release the edge/degree
-    // checkpoints (E rows) they were built from: repeated invocations —
-    // a probe's warm+timed runs, a bench's reps — otherwise ACCUMULATE
-    // E-row block-manager generations per call, the storage-pressure
-    // tail the round-11 20× probe OOM'ed on. One N-row block per
-    // invocation remains for the ContextCleaner.
-    val out = ranks.select(col("v").as("part"), col("r").as("pr")).localCheckpoint()
+    val out = finish(last).localCheckpoint()
     adj.unpersist()
     deg.unpersist()
     out
   }
+
+  /** Full (part, pr) rank table after [[Rounds]] synchronous rounds —
+    * the registered query takes its deterministic top-100; specs read the
+    * whole table (mass conservation is a global invariant). */
+  def pagerankFull(s: SparkSession, dir: String): DataFrame =
+    ranks(s, dir, (_, m) => lit(m))(_.select(col("v").as("part"), col("r").as("pr")))
 
   /** x59: K-round integer-fixed-point PageRank over the part
     * co-occurrence graph; edges + degrees checkpointed once, each round
@@ -156,56 +136,16 @@ object Graph {
   val pagerank = Q.withOracle(
     "x59_pagerank",
     s"x59: $Rounds-round fixed-point PageRank on the part co-occurrence graph",
-    pagerankOracle) { (s, dir) =>
+    s"""WITH ${rankCtes((_, m) => m)}
+       |SELECT v AS part, CAST(r AS BIGINT) AS pr
+       |FROM r$Rounds ORDER BY pr DESC, part LIMIT 100""".stripMargin) { (s, dir) =>
     pagerankFull(s, dir).orderBy(col("pr").desc, col("part")).limit(100)
   }
 
-  private def triangleOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
-       |deg AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM e UNION ALL SELECT v AS p FROM e)
-       |  GROUP BY 1),
-       |o AS MATERIALIZED (
-       |  SELECT CASE WHEN ku.d * 4294967296 + e.u < kv.d * 4294967296 + e.v
-       |              THEN e.u ELSE e.v END AS src,
-       |         CASE WHEN ku.d * 4294967296 + e.u < kv.d * 4294967296 + e.v
-       |              THEN e.v ELSE e.u END AS dst,
-       |         GREATEST(ku.d * 4294967296 + e.u, kv.d * 4294967296 + e.v) AS kdst
-       |  FROM e JOIN deg ku ON ku.p = e.u JOIN deg kv ON kv.p = e.v)
-       |SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
-       |       CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
-       |       CAST((SELECT COUNT(*)
-       |             FROM o a JOIN o b ON a.src = b.src AND a.kdst < b.kdst
-       |             JOIN o c ON c.src = a.dst AND c.dst = b.dst) AS BIGINT)
-       |         AS n_triangles""".stripMargin
-
   /** Undirected edges (u < v), checkpointed — shared by the degree count
     * and the orientation join. */
-  private def undirected(s: SparkSession, dir: String): DataFrame = {
-    // Aggregate-built edge set (optimization r16): collect_set dedups
-    // (ok, p) map-side inside ONE ok-keyed exchange (its partial-merge
-    // buffers ARE the distinct), then the ≤C(7,2) ordered pairs per
-    // order explode in-row — replacing the distinct + self-join +
-    // 3-exchange pipeline. Same edge set: pairs i<j over each order's
-    // sorted distinct part set ⇔ a.p < b.p over the order's rows.
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ps) - 2),
-          |  i -> transform(slice(ps, i + 2, size(ps) - i - 1),
-          |    y -> struct(ps[i] AS u, y AS v))))""".stripMargin)).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct()
-      .localCheckpoint()
-  }
+  private def undirected(s: SparkSession, dir: String): DataFrame =
+    Baskets.edges(s, dir, "u", "v", ordered = false).localCheckpoint()
 
   /** Orient an undirected (u, v) edge set low→high in the packed
     * (degree, id) total order, degrees computed ON THAT edge set — ids
@@ -223,8 +163,18 @@ object Graph {
         greatest(col("kukey"), col("kvkey")).as("kdst"))
   }
 
-  /** Closed-wedge (triangle) count of an oriented edge table as a 1-row
-    * scalar — the wedge join + closure probe shared by x60 and x60b.
+  /** The oriented edges of `e`, materialized as the pivot of both wedge
+    * sides and the closure probe, with `e` released: one edge
+    * generation held, not two. */
+  private def orientedOnce(e: DataFrame): DataFrame = {
+    val o = orientEdgeSet(e).localCheckpoint()
+    e.unpersist()
+    o
+  }
+
+  /** Every triangle (s, wu, wv) of an oriented edge table: the wedge
+    * join plus the closure probe, shared by x60/x60b (counted) and
+    * x99/x99b (credited per node).
     *
     * Optimization-r16 note: the x110 in-row wedge generation
     * (collect_list + per-pivot pair explode, one exchange instead of
@@ -234,13 +184,17 @@ object Graph {
     * pipelines wedge generation into the probe's exchange while the
     * list-explode form materializes per-pivot arrays first. Kept the
     * join form deliberately. */
-  private def countTriangles(o: DataFrame): DataFrame = {
+  private def closedWedges(o: DataFrame): DataFrame = {
     val wedges = o.as("a").join(o.as("b"),
         col("a.src") === col("b.src") && col("a.kdst") < col("b.kdst"))
-      .select(col("a.dst").as("wu"), col("b.dst").as("wv"))
+      .select(col("a.src").as("s"), col("a.dst").as("wu"), col("b.dst").as("wv"))
     wedges.join(o.as("c"), col("wu") === col("c.src") && col("wv") === col("c.dst"))
-      .agg(count(lit(1)).cast("long").as("t"))
   }
+
+  /** Closed-wedge (triangle) count of an oriented edge table as a 1-row
+    * scalar. */
+  private def countTriangles(o: DataFrame): DataFrame =
+    closedWedges(o).agg(count(lit(1)).cast("long").as("t"))
 
   /** The full graph's oriented edges. Exposed for the fan-out-bound
     * spec. */
@@ -253,13 +207,16 @@ object Graph {
   val triangles = Q.withOracle(
     "x60_triangle_count",
     "x60: degree-oriented exact triangle count on the part co-occurrence graph",
-    triangleOracle) { (s, dir) =>
+    s"""WITH ${GraphSql.undirected},
+       |${GraphSql.deg("deg", "e")},
+       |${GraphSql.orient("e", "deg")},
+       |${GraphSql.closure}
+       |SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
+       |       CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
+       |       CAST((SELECT COUNT(*) FROM t) AS BIGINT) AS n_triangles""".stripMargin) { (s, dir) =>
     // oriented edges are a bijection of the undirected set, so node and
     // edge counts read off o directly - ONE edge construction total
-    val e = undirected(s, dir)
-    val o = orientEdgeSet(e)
-      .localCheckpoint() // pivot of both wedge sides, the closure probe, and the counts
-    e.unpersist() // o is materialized; keep ONE edge generation, not two
+    val o = orientedOnce(undirected(s, dir))
     val tri = countTriangles(o).select(col("t").as("n_triangles"))
     val nn = o.select(explode(array(col("src"), col("dst"))).as("p")).distinct()
       .agg(count(lit(1)).cast("long").as("n_nodes"))
@@ -279,36 +236,17 @@ object Graph {
   private val TriSampleNibbles = Seq("0", "1", "2", "3")
   private val TriSampleInvP3 = 64L
 
-  private def doulionOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
-       |es AS MATERIALIZED (
+  /** The DOULION keep predicate on an edge (u, v). */
+  private def sampled(u: Column, v: Column): Column =
+    substring(md5(concat(u.cast("string"), lit("_"), v.cast("string"))), 1, 1)
+      .isin(TriSampleNibbles: _*)
+
+  /** `es`: the DOULION-kept edges of `e` — the oracle twin of [[sampled]]. */
+  private val sampledSql =
+    s"""es AS MATERIALIZED (
        |  SELECT u, v FROM e
        |  WHERE substr(md5(CAST(u AS VARCHAR) || '_' || CAST(v AS VARCHAR)), 1, 1)
-       |    IN (${TriSampleNibbles.map(n => s"'$n'").mkString(", ")})),
-       |deg AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM es UNION ALL SELECT v AS p FROM es)
-       |  GROUP BY 1),
-       |o AS MATERIALIZED (
-       |  SELECT CASE WHEN ku.d * 4294967296 + es.u < kv.d * 4294967296 + es.v
-       |              THEN es.u ELSE es.v END AS src,
-       |         CASE WHEN ku.d * 4294967296 + es.u < kv.d * 4294967296 + es.v
-       |              THEN es.v ELSE es.u END AS dst,
-       |         GREATEST(ku.d * 4294967296 + es.u, kv.d * 4294967296 + es.v) AS kdst
-       |  FROM es JOIN deg ku ON ku.p = es.u JOIN deg kv ON kv.p = es.v),
-       |t AS MATERIALIZED (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS st
-       |  FROM o a JOIN o b ON a.src = b.src AND a.kdst < b.kdst
-       |  JOIN o c ON c.src = a.dst AND c.dst = b.dst)
-       |SELECT CAST((SELECT COUNT(*) FROM es) AS BIGINT) AS n_sampled_edges,
-       |       st AS n_sampled_triangles,
-       |       CAST(st * $TriSampleInvP3 AS BIGINT) AS est_triangles
-       |FROM t""".stripMargin
+       |    IN (${TriSampleNibbles.map(n => s"'$n'").mkString(", ")}))""".stripMargin
 
   /** x60b: DOULION-style approximate triangle count (Tsourakakis et
     * al., KDD'09) — sparsify the edge set by a DETERMINISTIC hash
@@ -326,30 +264,25 @@ object Graph {
   val trianglesApprox = Q.withOracle(
     "x60b_triangle_doulion",
     "x60b: DOULION p=1/4 hash-sampled approximate triangle count",
-    doulionOracle) { (s, dir) =>
+    s"""WITH ${GraphSql.undirected},
+       |$sampledSql,
+       |${GraphSql.deg("deg", "es")},
+       |${GraphSql.orient("es", "deg")},
+       |${GraphSql.closure}
+       |SELECT CAST((SELECT COUNT(*) FROM es) AS BIGINT) AS n_sampled_edges,
+       |       st AS n_sampled_triangles,
+       |       CAST(st * $TriSampleInvP3 AS BIGINT) AS est_triangles
+       |FROM (SELECT CAST(COUNT(*) AS BIGINT) AS st FROM t)""".stripMargin) { (s, dir) =>
     // Sample BELOW the edge-dedup: the keep predicate commutes with
     // DISTINCT (it reads only the (u, v) key), so filtering the raw
     // in-row pairs first sends ~p of the rows through the dedup
     // shuffle — the oracle's post-dedup filter is the same edge set.
-    // Aggregate-built like undirected() (optimization r16).
-    val keep = substring(
-      md5(concat(col("e.u").cast("string"), lit("_"), col("e.v").cast("string"))),
-      1, 1).isin(TriSampleNibbles: _*)
-    val sampled = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ps) - 2),
-          |  i -> transform(slice(ps, i + 2, size(ps) - i - 1),
-          |    y -> struct(ps[i] AS u, y AS v))))""".stripMargin)).as("e"))
-      .filter(keep)
+    val kept = Baskets.pairs(Baskets(s, dir), "u", "v", ordered = false)
+      .filter(sampled(col("e.u"), col("e.v")))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
       .localCheckpoint() // orientation reads it three times (degrees + both join sides)
-    val o = orientEdgeSet(sampled)
-      .localCheckpoint() // pivot of both wedge sides + the closure probe
-    sampled.unpersist() // o is materialized; keep ONE edge generation
+    val o = orientedOnce(kept)
     val tri = countTriangles(o)
     val ne = o.agg(count(lit(1)).cast("long").as("n_sampled_edges"))
     ne.crossJoin(tri) // two 1-row scalars
@@ -364,59 +297,66 @@ object Graph {
   /** Deterministic seed predicate: ~1% of parts. */
   private val SeedMod = 97L
 
-  private def bfsOracle: String = {
-    val rounds = (1 to Hops).map { k =>
+  /** Exact min-hop label rounds d1..d`n` over `pairs` from `d0` — x63's
+    * oracle, and with `keyed` the per-seed (s, v) form of the x155/x158
+    * panel. */
+  private def hopCtes(n: Int, keyed: Boolean): String = {
+    val (key, dkey) = if (keyed) ("s, ", "d.s, ") else ("", "")
+    GraphSql.unroll(n) { k =>
       s"""d$k AS MATERIALIZED (
-         |  SELECT v, MIN(hop) AS hop FROM (
-         |    SELECT v, hop FROM d${k - 1}
+         |  SELECT ${key}v, MIN(hop) AS hop FROM (
+         |    SELECT ${key}v, hop FROM d${k - 1}
          |    UNION ALL
-         |    SELECT p.dst AS v, $k AS hop
+         |    SELECT ${dkey}p.dst AS v, $k AS hop
          |    FROM d${k - 1} d JOIN pairs p ON p.src = d.v
          |    WHERE d.hop = ${k - 1})
-         |  GROUP BY v)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
-       |d0 AS MATERIALIZED (
-       |  SELECT DISTINCT src AS v, 0 AS hop FROM pairs WHERE src % $SeedMod = 0),
-       |$rounds
-       |SELECT hop, CAST(COUNT(*) AS BIGINT) AS n_nodes
-       |FROM d$Hops GROUP BY hop ORDER BY hop""".stripMargin
+         |  GROUP BY ${key}v)""".stripMargin
+    }
+  }
+
+  /** One exact min-hop round, labels keyed by `keys` (none for x63, the
+    * seed `s` for the x155/x158 panel): only the CURRENT frontier joins
+    * the edges, never the full label table. The frontier side is pinned
+    * broadcast: the N-row node table is the side a cluster broadcasts
+    * (the x73 alive-set posture), and the hint keeps the round plan
+    * independent of the edge checkpoint's sizeInBytes estimate. */
+  private def hopRound(pairs: DataFrame, keys: Column*)(dist: DataFrame, k: Int): DataFrame = {
+    val reached = broadcast(dist.filter(col("hop") === k - 1))
+      .join(pairs, col("v") === col("src"))
+      .select(keys :+ col("dst").as("v") :+ lit(k).as("hop"): _*)
+    dist.unionAll(reached).groupBy(keys :+ col("v"): _*).agg(min(col("hop")).as("hop"))
+  }
+
+  /** Min-hop labels after `hops` [[hopRound]]s from the hop-0 labels
+    * `seeds` derives from the checkpointed edge table; the edges and the
+    * seed generation are released before returning (the x73 hygiene). */
+  private def hopLabels(s: SparkSession, dir: String, hops: Int, keys: Column*)(
+      seeds: DataFrame => DataFrame): DataFrame = {
+    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
+    val d0 = seeds(pairs).localCheckpoint()
+    val dist = Fixpoint.iterate(d0, hops, _ => false)(hopRound(pairs, keys: _*))._1
+    d0.unpersist()
+    pairs.unpersist() // final dist is materialized; edges no longer needed
+    dist
   }
 
   /** x63: multi-source BFS hop histogram — [[Hops]] rounds of frontier
-    * join + min-hop aggregation over the co-occurrence graph; only the
-    * CURRENT frontier joins edges each round, never the full label
-    * table. */
+    * join + min-hop aggregation over the co-occurrence graph. */
   val bfs = Q.withOracle(
     "x63_bfs_hops",
     s"x63: $Hops-hop multi-source BFS reach histogram (seeds: part % $SeedMod = 0)",
-    bfsOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
-    // the edge set is symmetrized, so src alone covers every node
-    var dist = pairs.select(col("src").as("v")).distinct()
-      .filter(col("v") % SeedMod === 0)
-      .select(col("v"), lit(0).as("hop"))
-      .localCheckpoint()
-    for (k <- 1 to Hops) {
-      // frontier side pinned broadcast (optimization r16): the N-row
-      // node table is the side a cluster broadcasts (the x73 alive-set
-      // posture); the hint keeps the round plan independent of the edge
-      // checkpoint's sizeInBytes estimate
-      val reached = broadcast(dist.filter(col("hop") === k - 1))
-        .join(pairs, col("v") === col("src"))
-        .select(col("dst").as("v"), lit(k).as("hop"))
-      val prev = dist
-      dist = dist.unionAll(reached)
-        .groupBy(col("v")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint() // each round's labels feed the next frontier
-      prev.unpersist() // superseded generation — the x73 block-manager hygiene
+    s"""WITH ${GraphSql.pairs},
+       |d0 AS MATERIALIZED (
+       |  SELECT DISTINCT src AS v, 0 AS hop FROM pairs WHERE src % $SeedMod = 0),
+       |${hopCtes(Hops, keyed = false)}
+       |SELECT hop, CAST(COUNT(*) AS BIGINT) AS n_nodes
+       |FROM d$Hops GROUP BY hop ORDER BY hop""".stripMargin) { (s, dir) =>
+    val dist = hopLabels(s, dir, Hops) { pairs =>
+      // the edge set is symmetrized, so src alone covers every node
+      pairs.select(col("src").as("v")).distinct()
+        .filter(col("v") % SeedMod === 0)
+        .select(col("v"), lit(0).as("hop"))
     }
-    pairs.unpersist() // final dist is materialized; edges no longer needed
     dist.groupBy(col("hop")).agg(count(lit(1)).cast("long").as("n_nodes"))
       .orderBy(col("hop"))
   }
@@ -435,56 +375,24 @@ object Graph {
     * [[DiamHops]] exact min-hop rounds ending in `d$DiamHops`) — the
     * oracle-side twin of [[seedPanelDist]], consumed by both x155's
     * hop-plot and x158's harmonic scores. */
-  private def panelCtes: String = {
-    val rounds = (1 to DiamHops).map { k =>
-      s"""d$k AS MATERIALIZED (
-         |  SELECT s, v, MIN(hop) AS hop FROM (
-         |    SELECT s, v, hop FROM d${k - 1}
-         |    UNION ALL
-         |    SELECT d.s, p.dst AS v, $k AS hop
-         |    FROM d${k - 1} d JOIN pairs p ON p.src = d.v
-         |    WHERE d.hop = ${k - 1})
-         |  GROUP BY s, v)""".stripMargin
-    }.mkString(",\n")
-    s"""li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
+  private def panelCtes: String =
+    s"""${GraphSql.pairs},
        |seeds AS MATERIALIZED (
        |  SELECT p FROM (SELECT DISTINCT src AS p FROM pairs)
        |  ORDER BY md5(CAST(p AS VARCHAR)), p LIMIT $DiamSeeds),
        |d0 AS MATERIALIZED (
        |  SELECT p AS s, p AS v, 0 AS hop FROM seeds),
-       |$rounds""".stripMargin
-  }
+       |${hopCtes(DiamHops, keyed = true)}""".stripMargin
 
   /** Exact (seed, node, min-hop) labels for the [[DiamSeeds]]-seed panel
     * after [[DiamHops]] frontier rounds — the shared walk behind x155
-    * (hop-plot) and x158 (harmonic scores). Returned frame is
-    * localCheckpointed; intermediate generations and the edge cache are
-    * released before returning (the x73 hygiene). */
-  private def seedPanelDist(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coEdges(s, dir).localCheckpoint() // read once per round
-    val seeds = pairs.select(col("src").as("p")).distinct()
-      .orderBy(md5(col("p").cast("string")), col("p")).limit(DiamSeeds)
-    var dist = seeds.select(col("p").as("s"), col("p").as("v"), lit(0).as("hop"))
-      .localCheckpoint()
-    for (k <- 1 to DiamHops) {
-      // frontier side pinned broadcast — the x63 round-join posture
-      val reached = broadcast(dist.filter(col("hop") === k - 1))
-        .join(pairs, col("v") === col("src"))
-        .select(col("s"), col("dst").as("v"), lit(k).as("hop"))
-      val prev = dist
-      dist = dist.unionAll(reached)
-        .groupBy(col("s"), col("v")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint() // each round's labels feed the next frontier
-      prev.unpersist() // superseded generation — the x73 hygiene
+    * (hop-plot) and x158 (harmonic scores). */
+  private def seedPanelDist(s: SparkSession, dir: String): DataFrame =
+    hopLabels(s, dir, DiamHops, col("s")) { pairs =>
+      pairs.select(col("src").as("p")).distinct()
+        .orderBy(md5(col("p").cast("string")), col("p")).limit(DiamSeeds)
+        .select(col("p").as("s"), col("p").as("v"), lit(0).as("hop"))
     }
-    pairs.unpersist() // final dist is materialized; edges no longer needed
-    dist
-  }
 
   private def diameterOracle: String = {
     s"""WITH $panelCtes,
@@ -599,10 +507,10 @@ object Graph {
     * defect this pack rule exists to avoid). */
   private val PackBase = 1L << 31
 
-  /** The pairs + l0..l`n` CTE prefix shared by x70's fixed-round oracle
-    * and x70b's converged-tier oracle. */
+  /** The pairs + l0..l`n` CTE prefix shared by x70's fixed-round
+    * oracle, x70b's converged-tier oracle and x149's modularity. */
   private def lpaRoundsCtes(n: Int): String = {
-    val rounds = (1 to n).map { k =>
+    val rounds = GraphSql.unroll(n) { k =>
       s"""l$k AS MATERIALIZED (
          |  SELECT v, label FROM (
          |    SELECT e.dst AS v, l.label,
@@ -611,31 +519,13 @@ object Graph {
          |    FROM pairs e JOIN l${k - 1} l ON l.v = e.src
          |    GROUP BY e.dst, l.label)
          |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
+    }
+    s"""${GraphSql.pairs},
        |l0 AS MATERIALIZED (
        |  SELECT DISTINCT src AS v, src AS label FROM pairs),
        |$rounds""".stripMargin
   }
 
-  private def lpaOracle: String =
-    s"""WITH ${lpaRoundsCtes(LpaRounds)}
-       |SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_nodes
-       |FROM l$LpaRounds GROUP BY label
-       |ORDER BY n_nodes DESC, community LIMIT 100""".stripMargin
-
-  /** x70: synchronous label propagation over the part co-occurrence
-    * graph — each round every node adopts the most frequent label among
-    * its neighbors (ties → smallest), realized as one keyed count
-    * aggregation plus one packed-long min per round. Completes the
-    * graph family: CC (x16) answers "connected?", LPA answers "which
-    * DENSE region?" — communities are the curation unit for
-    * domain-cluster analysis over co-occurrence graphs. */
   /** One synchronous LPA round: every node adopts the most frequent
     * neighbor label (ties → smallest), as one keyed count aggregation
     * plus one packed-long min (both hash aggregates with map-side
@@ -649,25 +539,46 @@ object Graph {
       .agg(min((lit(PackBase) - col("c")) * lit(PackBase) + col("label")).as("p"))
       .select(col("dst").as("v"), pmod(col("p"), lit(PackBase)).as("label"))
 
+  /** Round-0 labels, checkpointed: every node labelled by itself. */
+  private def lpaInit(pairs: DataFrame): DataFrame =
+    pairs.select(col("src").as("v")).distinct()
+      .withColumn("label", col("v"))
+      .localCheckpoint()
+
+  /** The labels after [[LpaRounds]] fixed rounds over the checkpointed
+    * edge table — the partition x70 reports and x149 scores. */
+  private def lpaLabels(pairs: DataFrame): DataFrame = {
+    val init = lpaInit(pairs)
+    val labels = Fixpoint.iterate(init, LpaRounds, _ => false)((l, _) => lpaRound(pairs, l))._1
+    init.unpersist()
+    labels
+  }
+
+  /** Community sizes of a label table, top-100 by size. */
+  private def communities(labels: DataFrame, extra: Column*): DataFrame =
+    labels.groupBy(col("label"))
+      .agg(count(lit(1)).cast("long").as("n_nodes"))
+      .select(Seq(col("label").as("community"), col("n_nodes")) ++ extra: _*)
+      .orderBy(col("n_nodes").desc, col("community")).limit(100)
+
+  /** x70: synchronous label propagation over the part co-occurrence
+    * graph — each round every node adopts the most frequent label among
+    * its neighbors (ties → smallest), realized as one keyed count
+    * aggregation plus one packed-long min per round. Completes the
+    * graph family: CC (x16) answers "connected?", LPA answers "which
+    * DENSE region?" — communities are the curation unit for
+    * domain-cluster analysis over co-occurrence graphs. */
   val labelProp = Q.withOracle(
     "x70_label_propagation",
     s"x70: $LpaRounds-round label propagation communities (top-100 by size)",
-    lpaOracle) { (s, dir) =>
+    s"""WITH ${lpaRoundsCtes(LpaRounds)}
+       |SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_nodes
+       |FROM l$LpaRounds GROUP BY label
+       |ORDER BY n_nodes DESC, community LIMIT 100""".stripMargin) { (s, dir) =>
     val pairs = coEdges(s, dir).localCheckpoint() // read once per round
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    for (_ <- 1 to LpaRounds) {
-      val prev = labels
-      labels = lpaRound(pairs, labels)
-        .localCheckpoint() // each round's labels feed the next join
-      prev.unpersist() // superseded generation — the x73 block-manager hygiene
-    }
+    val labels = lpaLabels(pairs)
     pairs.unpersist() // final labels are materialized; edges no longer needed
-    labels.groupBy(col("label"))
-      .agg(count(lit(1)).cast("long").as("n_nodes"))
-      .select(col("label").as("community"), col("n_nodes"))
-      .orderBy(col("n_nodes").desc, col("community")).limit(100)
+    communities(labels)
   }
 
   /** x70's production form: iterate [[lpaRound]] until labels are
@@ -677,44 +588,35 @@ object Graph {
     * (label table, rounds applied); `rounds == maxRounds` with an
     * unstable final state is possible (synchronous LPA can 2-cycle on
     * bipartite structure — the classic oscillation; the cap is the
-    * documented defense, and disjoint-copy probes show rounds-to-
-    * convergence is a property of the graph STRUCTURE, not its size).
-    * Each round adds one (v-keyed) self-join + count to detect change —
-    * the stability check costs one more bounded aggregation, nothing
-    * corpus-shaped. Superseded label generations are unpersisted as the
-    * iteration advances (the x73 block-manager hygiene). */
+    * documented defense, and GraphSpec's disjoint-copy test shows
+    * rounds-to-convergence is a property of the graph STRUCTURE, not
+    * its size). The stability check costs one bounded filter-count per
+    * round, nothing corpus-shaped. */
   def convergedLabelProp(s: SparkSession, dir: String,
       maxRounds: Int = 50): (DataFrame, Int) = {
     val pairs = coEdges(s, dir).localCheckpoint()
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    var rounds = 0
-    var changed = 1L
-    // Change detection fused into the round checkpoint (optimization
-    // r16): each round's materialization carries the previous label, so
-    // the stability check is a filter-count over the checkpointed N-row
-    // frame instead of a separate join job per round.
-    var ck = labels // the checkpointed generation to release
-    while (changed > 0 && rounds < maxRounds) {
-      val next = lpaRound(pairs, labels)
+    val init = lpaInit(pairs)
+    // Change detection fused into the round checkpoint: each round's
+    // materialization carries the previous label, so the stability check
+    // is a filter-count over the checkpointed N-row frame instead of a
+    // separate join job per round.
+    val (last, rounds) = Fixpoint.iterate(init, maxRounds,
+        _.filter(col("label") =!= col("prev")).count() == 0) { (prev, _) =>
+      val labels = prev.select(col("v"), col("label"))
+      lpaRound(pairs, labels)
         .join(broadcast(labels.select(col("v"), col("label").as("prev"))), "v")
-        .localCheckpoint()
-      changed = next.filter(col("label") =!= col("prev")).count()
-      ck.unpersist()
-      ck = next
-      labels = next.select(col("v"), col("label"))
-      rounds += 1
     }
+    init.unpersist()
     pairs.unpersist()
-    (labels, rounds)
+    (last.select(col("v"), col("label")), rounds)
   }
 
   /** Round cap for the REGISTERED converged-tier query — the oracle
-    * unrolls exactly this many CTE rounds, so it must stay small; the
-    * ConvergeProbe measured stability at round 7 on this graph family
-    * (rounds-to-convergence is a structure property, flat across
-    * factors), so 10 carries headroom without an unbounded oracle. */
+    * unrolls exactly this many CTE rounds, so it must stay small;
+    * stability arrived at round 7 on this graph family (SCALING.md
+    * §"Rounds-to-convergence"; rounds-to-convergence is a structure
+    * property, flat across factors — GraphSpec pins it on disjoint
+    * copies), so 10 carries headroom without an unbounded oracle. */
   private val LpaMaxRounds = 10
 
   /** x70b: [[convergedLabelProp]] as a REGISTERED query — the form a
@@ -760,11 +662,7 @@ object Graph {
          |ORDER BY n_nodes DESC, community LIMIT 100""".stripMargin
     }) { (s, dir) =>
     val (labels, rounds) = convergedLabelProp(s, dir, LpaMaxRounds)
-    labels.groupBy(col("label"))
-      .agg(count(lit(1)).cast("long").as("n_nodes"))
-      .select(col("label").as("community"), col("n_nodes"),
-        lit(rounds.toLong).as("rounds_to_converge"))
-      .orderBy(col("n_nodes").desc, col("community")).limit(100)
+    communities(labels, lit(rounds.toLong).as("rounds_to_converge"))
   }
 
   /** x73's production form: peel until the edge set is a FIXPOINT (a
@@ -776,38 +674,29 @@ object Graph {
     * fixpoint). */
   def kcoreFixpoint(s: SparkSession, dir: String, k: Int = CoreK,
       maxRounds: Int = 1000): (DataFrame, Int) = {
-    // Node-centric like the registered x73 (edges checkpointed once,
-    // N-row alive sets per round); the peel is MONOTONE (k_r ⊆
-    // alive_{r-1} — a node outside the alive set has no induced edges
-    // and can never re-enter), so an unchanged alive COUNT proves an
-    // unchanged alive SET proves the fixpoint.
+    // Node-centric like the registered x73: edges checkpointed once,
+    // one N-row degree checkpoint per round, and the alive set a filter
+    // VIEW over it (its consumers — two broadcast sides and the next
+    // round's degree build — re-read N checkpointed rows). The peel is
+    // MONOTONE (k_r ⊆ alive_{r-1} — a node outside the alive set has no
+    // induced edges and can never re-enter), so an unchanged alive COUNT
+    // proves an unchanged alive SET proves the fixpoint.
     val e = coEdges(s, dir).localCheckpoint()
-    var alive: Option[DataFrame] = None
-    var gen: Option[DataFrame] = None // the checkpointed degree generation
+    def alive(deg: DataFrame) = deg.filter(col("c") >= k).select(col("src").as("v"))
     var aliveN = -1L // unknown until round 1 counts the full node set
-    var rounds = 0
-    var stable = false
-    // One N-row checkpoint per round (optimization r16): the alive set
-    // is a filter VIEW over the checkpointed degree table instead of a
-    // second materialization — its consumers (two broadcast sides and
-    // the next round's degree build) re-read N checkpointed rows.
-    while (!stable && rounds < maxRounds) {
-      val deg = induced(e, alive).groupBy(col("src")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+    val (deg, rounds) = Fixpoint.iterate(e, maxRounds, { deg =>
       val prevN = if (aliveN >= 0) aliveN else deg.count() // alive_0 = all nodes
-      val keep = deg.filter(col("c") >= k).select(col("src").as("v"))
-      val keptN = keep.count()
-      gen.foreach(_.unpersist())
-      gen = Some(deg)
-      alive = Some(keep)
-      stable = keptN == prevN
+      val keptN = alive(deg).count()
       aliveN = keptN
-      rounds += 1
+      keptN == prevN
+    }) { (prev, r) => // round 1 peels the full edge table, `init`
+      induced(e, if (r == 1) None else Some(alive(prev)))
+        .groupBy(col("src")).agg(count(lit(1)).as("c"))
     }
     // materialize the final alive set so callers hold (and can release)
     // a self-contained N-row block, then drop the loop's generations
-    val out = alive.get.localCheckpoint()
-    gen.foreach(_.unpersist())
+    val out = alive(deg).localCheckpoint()
+    deg.unpersist()
     e.unpersist()
     (out, rounds)
   }
@@ -824,20 +713,16 @@ object Graph {
   /** The e0 + d/k/e round-chain CTE prefix shared by x73's fixed-round
     * oracle and x73b's converged-tier oracle. */
   private def kcoreRoundsCtes(n: Int): String = {
-    val rounds = (1 to n).map { r =>
+    val rounds = GraphSql.unroll(n) { r =>
       s"""d$r AS MATERIALIZED (
          |  SELECT src, COUNT(*) AS c FROM e${r - 1} GROUP BY src),
          |k$r AS MATERIALIZED (SELECT src AS v FROM d$r WHERE c >= $CoreK),
          |e$r AS MATERIALIZED (
          |  SELECT e.src, e.dst FROM e${r - 1} e
          |  JOIN k$r a ON e.src = a.v JOIN k$r b ON e.dst = b.v)""".stripMargin
-    }.mkString(",\n")
-    s"""li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e0 AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
+    }
+    s"""${GraphSql.li},
+       |${GraphSql.edges("e0", "src", "dst", "<>", "")},
        |$rounds""".stripMargin
   }
 
@@ -978,7 +863,7 @@ object Graph {
   private val SsspRounds = 3
 
   private def ssspOracle: String = {
-    val rounds = (1 to SsspRounds).map { k =>
+    val rounds = GraphSql.unroll(SsspRounds) { k =>
       s"""d$k AS MATERIALIZED (
          |  SELECT v, MIN(d) AS d FROM (
          |    SELECT v, d FROM d${k - 1}
@@ -986,14 +871,9 @@ object Graph {
          |    SELECT e.dst AS v, r.d + e.w AS d
          |    FROM d${k - 1} r JOIN wedges e ON e.src = r.v)
          |  GROUP BY v)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |wedges AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst,
-       |    (1000 // COUNT(*)) + 1 AS w
-       |  FROM li a JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
+    }
+    s"""WITH ${GraphSql.li},
+       |${GraphSql.edges("wedges", "src", "dst", "<>", ", (1000 // COUNT(*)) + 1 AS w")},
        |d0 AS MATERIALIZED (
        |  SELECT DISTINCT src AS v, CAST(0 AS BIGINT) AS d
        |  FROM wedges WHERE src % $SeedMod = 0),
@@ -1021,17 +901,9 @@ object Graph {
     "x81_sssp_weighted",
     s"x81: $SsspRounds-round Bellman-Ford multi-source shortest paths (cost = 1000 div cooc + 1)",
     ssspOracle) { (s, dir) =>
-    // aggregate-built like coEdges (optimization r16): orderParts is
-    // distinct, so each ordered pair appears once per containing order
-    // and the (src, dst) count equals the former self-join's cooc
-    val wedges = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(ps,
-          |  x -> transform(filter(ps, y -> y != x),
-          |    y -> struct(x AS src, y AS dst))))""".stripMargin)).as("e"))
+    // each ordered pair appears once per basket holding both parts, so
+    // its count is the co-occurrence strength
+    val wedges = Baskets.pairs(Baskets(s, dir), "src", "dst", ordered = true)
       .groupBy(col("e.src").as("src"), col("e.dst").as("dst"))
       .agg(count(lit(1)).as("cooc"))
       .select(col("src"), col("dst"), (expr("1000 div cooc") + 1L).as("w"))
@@ -1076,41 +948,36 @@ object Graph {
     * degenerate ties. */
   private val CcMinDeg = 5
 
-  private def clusteringOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
-       |deg AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM e UNION ALL SELECT v AS p FROM e)
-       |  GROUP BY 1),
-       |o AS MATERIALIZED (
-       |  SELECT CASE WHEN ku.d * 4294967296 + e.u < kv.d * 4294967296 + e.v
-       |              THEN e.u ELSE e.v END AS src,
-       |         CASE WHEN ku.d * 4294967296 + e.u < kv.d * 4294967296 + e.v
-       |              THEN e.v ELSE e.u END AS dst,
-       |         GREATEST(ku.d * 4294967296 + e.u, kv.d * 4294967296 + e.v) AS kdst
-       |  FROM e JOIN deg ku ON ku.p = e.u JOIN deg kv ON kv.p = e.v),
-       |t AS MATERIALIZED (
-       |  SELECT a.src AS s, a.dst AS wu, b.dst AS wv
-       |  FROM o a JOIN o b ON a.src = b.src AND a.kdst < b.kdst
-       |  JOIN o c ON c.src = a.dst AND c.dst = b.dst),
+  /** The x99/x99b oracle: per-node triangle credits `pt` over the
+    * oriented (with `sampled`, DOULION-kept) graph, reported against the
+    * TRUE degrees `deg` as `cols`, top-20 by `order`. */
+  private def clusteringSql(sampled: Boolean, cols: String, order: String): String = {
+    val (es, from, deg) =
+      if (sampled) (s"$sampledSql,\n${GraphSql.deg("degs", "es")},\n", "es", "degs")
+      else ("", "e", "deg")
+    s"""WITH ${GraphSql.undirected},
+       |${GraphSql.deg("deg", "e")},
+       |$es${GraphSql.orient(from, deg)},
+       |${GraphSql.closure},
        |pt AS MATERIALIZED (
        |  SELECT p, CAST(COUNT(*) AS BIGINT) AS tri FROM (
        |    SELECT s AS p FROM t
        |    UNION ALL SELECT wu AS p FROM t
        |    UNION ALL SELECT wv AS p FROM t)
        |  GROUP BY 1)
-       |SELECT deg.p AS part, deg.d AS degree,
-       |  COALESCE(pt.tri, 0) AS n_tri,
-       |  CAST(2 * COALESCE(pt.tri, 0) AS DOUBLE)
-       |    / (CAST(deg.d AS DOUBLE) * (deg.d - 1)) AS clustering
+       |SELECT deg.p AS part, deg.d AS degree, $cols
        |FROM deg LEFT JOIN pt ON pt.p = deg.p
        |WHERE deg.d >= $CcMinDeg
-       |ORDER BY clustering DESC, part LIMIT 20""".stripMargin
+       |ORDER BY $order, part LIMIT 20""".stripMargin
+  }
+
+  /** Per-node triangle credits of an oriented edge table: each closed
+    * wedge (s, wu, wv) explodes into three node credits, one node-keyed
+    * hash agg on the (triangle-bounded) stream — shared by x99 (exact)
+    * and x99b (DOULION-sampled). */
+  private def perNodeTriangles(o: DataFrame): DataFrame =
+    closedWedges(o).select(explode(array(col("s"), col("wu"), col("wv"))).as("p"))
+      .groupBy(col("p")).agg(count(lit(1)).as("tri"))
 
   /** x99: per-node local clustering coefficient — "how clique-like is
     * each part's co-occurrence neighbourhood": c(v) = 2·tri(v) /
@@ -1126,29 +993,15 @@ object Graph {
     * Scale: identical regime to x60 (the wedge join dominates; probe
     * x60's row) + one explode×3 of the triangle output and a node-keyed
     * agg — both bounded by the triangle count, far below wedge volume. */
-  /** Per-node triangle credits of an oriented edge table: each closed
-    * wedge (s, wu, wv) found by the x60 closure join explodes into three
-    * node credits, one node-keyed hash agg on the (triangle-bounded)
-    * stream — shared by x99 (exact) and x99b (DOULION-sampled). */
-  private def perNodeTriangles(o: DataFrame): DataFrame = {
-    val wedges = o.as("a").join(o.as("b"),
-        col("a.src") === col("b.src") && col("a.kdst") < col("b.kdst"))
-      .select(col("a.src").as("s"), col("a.dst").as("wu"), col("b.dst").as("wv"))
-    val tris = wedges.join(o.as("c"),
-        col("wu") === col("c.src") && col("wv") === col("c.dst"))
-      .select(col("s"), col("wu"), col("wv"))
-    tris.select(explode(array(col("s"), col("wu"), col("wv"))).as("p"))
-      .groupBy(col("p")).agg(count(lit(1)).as("tri"))
-  }
-
   val clusteringCoeff = Q.withOracle(
     "x99_clustering_coeff",
     s"x99: top-20 local clustering coefficients (degree >= $CcMinDeg) on the part graph",
-    clusteringOracle) { (s, dir) =>
-    val e = undirected(s, dir)
-    val o = orientEdgeSet(e)
-      .localCheckpoint() // degrees, both wedge sides, and the closure probe
-    e.unpersist() // o is materialized; keep ONE edge generation
+    clusteringSql(sampled = false,
+      """COALESCE(pt.tri, 0) AS n_tri,
+        |  CAST(2 * COALESCE(pt.tri, 0) AS DOUBLE)
+        |    / (CAST(deg.d AS DOUBLE) * (deg.d - 1)) AS clustering""".stripMargin,
+      "clustering DESC")) { (s, dir) =>
+    val o = orientedOnce(undirected(s, dir)) // also the degree source
     val deg = o.select(explode(array(col("src"), col("dst"))).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
     val perNode = perNodeTriangles(o)
@@ -1162,50 +1015,6 @@ object Graph {
   }
 
   // ---- x99b: DOULION-sampled local clustering coefficient -----------
-
-  private def clusteringDoulionOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
-       |deg AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM e UNION ALL SELECT v AS p FROM e)
-       |  GROUP BY 1),
-       |es AS MATERIALIZED (
-       |  SELECT u, v FROM e
-       |  WHERE substr(md5(CAST(u AS VARCHAR) || '_' || CAST(v AS VARCHAR)), 1, 1)
-       |    IN (${TriSampleNibbles.map(n => s"'$n'").mkString(", ")})),
-       |degs AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM es UNION ALL SELECT v AS p FROM es)
-       |  GROUP BY 1),
-       |o AS MATERIALIZED (
-       |  SELECT CASE WHEN ku.d * 4294967296 + es.u < kv.d * 4294967296 + es.v
-       |              THEN es.u ELSE es.v END AS src,
-       |         CASE WHEN ku.d * 4294967296 + es.u < kv.d * 4294967296 + es.v
-       |              THEN es.v ELSE es.u END AS dst,
-       |         GREATEST(ku.d * 4294967296 + es.u, kv.d * 4294967296 + es.v) AS kdst
-       |  FROM es JOIN degs ku ON ku.p = es.u JOIN degs kv ON kv.p = es.v),
-       |t AS MATERIALIZED (
-       |  SELECT a.src AS s, a.dst AS wu, b.dst AS wv
-       |  FROM o a JOIN o b ON a.src = b.src AND a.kdst < b.kdst
-       |  JOIN o c ON c.src = a.dst AND c.dst = b.dst),
-       |pt AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS st FROM (
-       |    SELECT s AS p FROM t
-       |    UNION ALL SELECT wu AS p FROM t
-       |    UNION ALL SELECT wv AS p FROM t)
-       |  GROUP BY 1)
-       |SELECT deg.p AS part, deg.d AS degree,
-       |  CAST(COALESCE(pt.st, 0) * $TriSampleInvP3 AS BIGINT) AS est_tri,
-       |  CAST(2 * COALESCE(pt.st, 0) * $TriSampleInvP3 AS DOUBLE)
-       |    / (CAST(deg.d AS DOUBLE) * (deg.d - 1)) AS est_clustering
-       |FROM deg LEFT JOIN pt ON pt.p = deg.p
-       |WHERE deg.d >= $CcMinDeg
-       |ORDER BY degree DESC, part LIMIT 20""".stripMargin
 
   /** x99b: DOULION-sampled local clustering coefficient — x99's scale
     * tier, closing the one probe row whose EXACT form is inherently
@@ -1228,15 +1037,16 @@ object Graph {
   val clusteringApprox = Q.withOracle(
     "x99b_clustering_doulion",
     s"x99b: DOULION p=1/4 sampled clustering coefficients, top-20 by degree",
-    clusteringDoulionOracle) { (s, dir) =>
+    clusteringSql(sampled = true,
+      s"""CAST(COALESCE(pt.tri, 0) * $TriSampleInvP3 AS BIGINT) AS est_tri,
+         |  CAST(2 * COALESCE(pt.tri, 0) * $TriSampleInvP3 AS DOUBLE)
+         |    / (CAST(deg.d AS DOUBLE) * (deg.d - 1)) AS est_clustering""".stripMargin,
+      "degree DESC")) { (s, dir) =>
     val e = undirected(s, dir)
     // true degrees from the FULL edge set (the estimator denominator)
     val deg = e.select(explode(array(col("u"), col("v"))).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
-    val keep = substring(
-      md5(concat(col("u").cast("string"), lit("_"), col("v").cast("string"))),
-      1, 1).isin(TriSampleNibbles: _*)
-    val o = orientEdgeSet(e.filter(keep))
+    val o = orientEdgeSet(e.filter(sampled(col("u"), col("v"))))
       .localCheckpoint() // both wedge sides + the closure probe
     // NO unpersist of e: the result is lazy and deg still reads it;
     // the callers' sweep/ContextCleaner reclaims after materialization.
@@ -1251,16 +1061,8 @@ object Graph {
   }
 
   private def assortativityOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
-       |deg AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS d
-       |  FROM (SELECT u AS p FROM e UNION ALL SELECT v AS p FROM e)
-       |  GROUP BY 1),
+    s"""WITH ${GraphSql.undirected},
+       |${GraphSql.deg("deg", "e")},
        |dd AS MATERIALIZED (
        |  SELECT du.d AS x, dv.d AS y FROM e
        |  JOIN deg du ON du.p = e.u JOIN deg dv ON dv.p = e.v
@@ -1354,12 +1156,7 @@ object Graph {
   private val LpMinCn = 2
 
   private def linkPredictOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |e AS MATERIALIZED (
-       |  SELECT a.p AS u, b.p AS v FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p < b.p
-       |  GROUP BY 1, 2),
+    s"""WITH ${GraphSql.undirected},
        |adj AS MATERIALIZED (
        |  SELECT u AS z, v AS n FROM e UNION ALL SELECT v AS z, u AS n FROM e),
        |deg AS MATERIALIZED (
@@ -1408,14 +1205,13 @@ object Graph {
     val e = undirected(s, dir)
     val adj = e.select(col("u").as("z"), col("v").as("n"))
       .unionAll(e.select(col("v").as("z"), col("u").as("n")))
-    // In-row wedge generation (optimization r16): ONE z-keyed exchange
-    // builds each center's sorted neighbor list; qualifying centers
-    // (degree = list size ≤ cap, ≥ 2 so a pair exists) explode their
-    // C(d,2) ordered pairs in-row with the per-center RA weight computed
-    // once. Provably the same wedge multiset as the former
-    // ctr-self-join (pairs i<j over the value-sorted distinct neighbor
-    // list ⇔ join condition a.n < b.n), with two E-sized exchanges,
-    // both SMJ sorts, the deg join, and the ctr checkpoint all gone.
+    // In-row wedge generation: ONE z-keyed exchange builds each
+    // center's sorted neighbor list; qualifying centers (degree = list
+    // size ≤ cap, ≥ 2 so a pair exists) explode their C(d,2) ordered
+    // pairs in-row with the per-center RA weight computed once — the
+    // same wedge multiset as the oracle's ctr self-join (pairs i<j over
+    // the value-sorted distinct neighbor list ⇔ a.n < b.n) with no
+    // E-sized self-join exchange.
     //
     // The collector is [[Kmv.BoundedDistinctMinK]] with k = cap + 1,
     // NOT collect_list: a center with more than cap distinct neighbors
@@ -1525,40 +1321,6 @@ object Graph {
   /** Seed predicate for x148 (portable md5 bucket — 1/16 of parts). */
   private val SeedSql = "substr(md5(CAST(%s AS VARCHAR)), 1, 1) = '0'"
 
-  private def pprOracle: String = {
-    val rounds = (1 to Rounds).map { k =>
-      s"""r$k AS MATERIALIZED (
-         |  SELECT d.src AS v,
-         |    (CASE WHEN ${SeedSql.format("d.src")}
-         |      THEN ${RScale * 15 / 100} ELSE 0 END)
-         |      + ($DampNum * COALESCE(s.m, 0)) // 100 AS r
-         |  FROM deg d LEFT JOIN (
-         |    SELECT p.dst, SUM(r.r // g.d) AS m
-         |    FROM pairs p JOIN r${k - 1} r ON p.src = r.v
-         |    JOIN deg g ON g.src = p.src
-         |    GROUP BY p.dst) s ON d.src = s.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
-       |deg AS MATERIALIZED (
-       |  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM pairs GROUP BY 1),
-       |r0 AS MATERIALIZED (
-       |  SELECT src AS v,
-       |    CASE WHEN ${SeedSql.format("src")}
-       |      THEN CAST($RScale AS BIGINT) ELSE CAST(0 AS BIGINT) END AS r
-       |  FROM deg),
-       |$rounds
-       |SELECT v AS part,
-       |  CAST(CASE WHEN ${SeedSql.format("v")} THEN 1 ELSE 0 END AS BIGINT)
-       |    AS is_seed,
-       |  CAST(r AS BIGINT) AS ppr
-       |FROM r$Rounds WHERE r > 0 ORDER BY ppr DESC, part LIMIT 100""".stripMargin
-  }
-
   /** x148: personalized PageRank — the seed-anchored relevance score
     * behind "more like these" expansion (recsys candidate generation,
     * related-entity discovery): PageRank's teleport mass lands ONLY on a
@@ -1571,64 +1333,26 @@ object Graph {
   val personalizedPagerank = Q.withOracle(
     "x148_personalized_pagerank",
     s"x148: $Rounds-round personalized PageRank from the md5-bucket seed set (top-100)",
-    pprOracle) { (s, dir) =>
-    val pairs = coEdges(s, dir).localCheckpoint()
-    val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("d")).localCheckpoint()
-    // round-invariant degree-annotated adjacency — the x59 optimization
-    val adj = pairs.join(broadcast(deg), "src").localCheckpoint()
-    pairs.unpersist()
-    def seed(c: org.apache.spark.sql.Column) =
-      substring(md5(c.cast("string")), 1, 1) === "0"
-    var ranks = deg.select(col("src").as("v"),
-      when(seed(col("src")), lit(RScale)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to Rounds) {
-      val contrib = adj
-        .join(broadcast(ranks), col("src") === col("v"))
-        .select(col("dst"), expr("r div d").as("c"))
-        // decimal(38,0) carry — same overflow posture as x59's rounds
-        .groupBy(col("dst")).agg(sum(col("c").cast("decimal(38,0)")).as("m"))
-      ranks = deg
-        .select(col("src").as("v"))
-        .join(contrib, col("v") === col("dst"), "left")
-        .select(col("v"),
-          (when(seed(col("v")), lit(RScale * 15 / 100)).otherwise(lit(0L))
-            + expr(
-              s"CAST(($DampNum * coalesce(m, CAST(0 AS DECIMAL(38,0)))) div 100 AS BIGINT)"))
-            .as("r"))
+    s"""WITH ${rankCtes((v, m) => s"(CASE WHEN ${SeedSql.format(v)} THEN $m ELSE 0 END)")}
+       |SELECT v AS part,
+       |  CAST(CASE WHEN ${SeedSql.format("v")} THEN 1 ELSE 0 END AS BIGINT)
+       |    AS is_seed,
+       |  CAST(r AS BIGINT) AS ppr
+       |FROM r$Rounds WHERE r > 0 ORDER BY ppr DESC, part LIMIT 100""".stripMargin) { (s, dir) =>
+    def seed(c: Column) = substring(md5(c.cast("string")), 1, 1) === "0"
+    ranks(s, dir, (v, m) => when(seed(v), lit(m)).otherwise(lit(0L))) {
+      _.filter(col("r") > 0)
+        .select(col("v").as("part"),
+          when(seed(col("v")), 1L).otherwise(0L).as("is_seed"),
+          col("r").as("ppr"))
+        .orderBy(col("ppr").desc, col("part")).limit(100)
     }
-    val out = ranks.filter(col("r") > 0)
-      .select(col("v").as("part"),
-        when(seed(col("v")), 1L).otherwise(0L).as("is_seed"),
-        col("r").as("ppr"))
-      .orderBy(col("ppr").desc, col("part")).limit(100)
-      .localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    out
   }
 
   // ---- x149: modularity of the LPA partition --------------------------
 
-  private def modularityOracle: String = {
-    val rounds = (1 to LpaRounds).map { k =>
-      s"""l$k AS MATERIALIZED (
-         |  SELECT v, label FROM (
-         |    SELECT e.dst AS v, l.label,
-         |      ROW_NUMBER() OVER (PARTITION BY e.dst
-         |        ORDER BY COUNT(*) DESC, l.label) AS rn
-         |    FROM pairs e JOIN l${k - 1} l ON l.v = e.src
-         |    GROUP BY e.dst, l.label)
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS src, b.p AS dst FROM li a
-       |  JOIN li b ON a.ok = b.ok AND a.p <> b.p
-       |  GROUP BY 1, 2),
-       |l0 AS MATERIALIZED (
-       |  SELECT DISTINCT src AS v, src AS label FROM pairs),
-       |$rounds,
+  private def modularityOracle: String =
+    s"""WITH ${lpaRoundsCtes(LpaRounds)},
        |deg AS MATERIALIZED (
        |  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM pairs GROUP BY 1),
        |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m2 FROM pairs),
@@ -1654,7 +1378,6 @@ object Graph {
        |    AS BIGINT) AS DOUBLE)
        |    / (CAST(mm.m2 AS DOUBLE) * CAST(mm.m2 AS DOUBLE)) AS modularity
        |FROM terms CROSS JOIN mm GROUP BY mm.m2""".stripMargin
-  }
 
   /** x149: Newman modularity of the x70 LPA partition — the evaluation
     * member of the graph family (the x88/x143/x147 posture): did label
@@ -1674,14 +1397,7 @@ object Graph {
     s"x149: Newman modularity of the $LpaRounds-round LPA partition (exact integer numerator)",
     modularityOracle) { (s, dir) =>
     val pairs = coEdges(s, dir).localCheckpoint()
-    var labels = pairs.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    for (_ <- 1 to LpaRounds) {
-      val prev = labels
-      labels = lpaRound(pairs, labels).localCheckpoint()
-      prev.unpersist()
-    }
+    val labels = lpaLabels(pairs)
     val deg = pairs.groupBy(col("src")).agg(count(lit(1)).cast("long").as("d"))
     val la = labels.select(col("v").as("sv"), col("label").as("la"))
     val lb = labels.select(col("v").as("dv"), col("label").as("lb"))

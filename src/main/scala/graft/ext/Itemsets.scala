@@ -4,8 +4,8 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Association-rule mining over order baskets — the frequent-itemset
-  * primitive (A-Priori's 2-itemset core) shaped for Spark: basket
-  * construction is one orderkey-keyed self-join whose per-order fan-out
+  * primitive (A-Priori's 2-itemset core) shaped for Spark: baskets are
+  * one orderkey-keyed aggregate ([[Baskets]]) whose in-row pair fan-out
   * is bounded by basket size (≤7 lines in TPC-H-shaped data), pair
   * supports are one hash aggregation at pair grain, and the two
   * item-support joins attach |parts|-sized tables that AQE broadcasts at
@@ -23,15 +23,11 @@ object Itemsets {
   private val TopN = 100
 
   private val rulesOracle: String =
-    s"""WITH b AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-       |n AS MATERIALIZED (SELECT COUNT(DISTINCT ok) AS n_orders FROM b),
+    s"""WITH ${GraphSql.li},
+       |n AS MATERIALIZED (SELECT COUNT(DISTINCT ok) AS n_orders FROM li),
        |sup AS MATERIALIZED (
-       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS s FROM b GROUP BY 1),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.p AS p1, c.p AS p2, CAST(COUNT(*) AS BIGINT) AS n_both
-       |  FROM b a JOIN b c ON a.ok = c.ok AND a.p < c.p
-       |  GROUP BY 1, 2)
+       |  SELECT p, CAST(COUNT(*) AS BIGINT) AS s FROM li GROUP BY 1),
+       |${GraphSql.edges("pairs", "p1", "p2", "<", ", CAST(COUNT(*) AS BIGINT) AS n_both")}
        |SELECT p.p1, p.p2, p.n_both,
        |  CAST(p.n_both AS DOUBLE) / s1.s AS conf,
        |  (CAST(p.n_both AS DOUBLE) * n.n_orders) / (s1.s * s2.s) AS lift
@@ -48,22 +44,14 @@ object Itemsets {
     "x61_association_rules",
     s"x61: top-$TopN frequent part pairs with confidence and lift",
     rulesOracle) { (s, dir) =>
-    // Aggregate-built baskets (optimization r16, the coEdges build):
-    // one ok-keyed collect_set exchange replaces the (ok, p) distinct;
-    // supports explode the sets, pairs explode in-row (i<j over the
-    // sorted set ⇔ a.p < c.p), the order count is a row count.
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("p"))).as("ps"))
+    // Supports explode the basket sets, pairs explode in-row (i<j over
+    // the sorted set ⇔ a.p < c.p), the order count is a row count.
+    val baskets = Baskets(s, dir)
       .localCheckpoint() // read by supports, pair explode, and the order count
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     val sup = baskets.select(explode(col("ps")).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).cast("long").as("s"))
-    val pairs = baskets.filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ps) - 2),
-          |  i -> transform(slice(ps, i + 2, size(ps) - i - 1),
-          |    y -> struct(ps[i] AS p1, y AS p2))))""".stripMargin)).as("e"))
+    val pairs = Baskets.pairs(baskets, "p1", "p2", ordered = false)
       .groupBy(col("e.p1").as("p1"), col("e.p2").as("p2"))
       .agg(count(lit(1)).cast("long").as("n_both"))
     pairs

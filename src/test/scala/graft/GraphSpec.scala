@@ -264,6 +264,38 @@ class GraphSpec extends SparkSuite {
     assert(labels.select($"label").as[Long].collect().toSet.subsetOf(Set(5L, 7L)))
   }
 
+  test("rounds-to-convergence is a structure property: disjoint key-shifted copies stop together") {
+    // Three copies of one graph, each in its own key space (ScaleProbe's
+    // disjoint-replica construction): every round acts on all copies at
+    // once, so convergedLabelProp and kcoreFixpoint must stop after the
+    // base graph's round count, with exactly 3x its rows. A different
+    // count means the copies interact (a key-shift bug) or the stop test
+    // is size-sensitive.
+    val base = Seq(
+      (1L, 1L), (1L, 2L), (1L, 3L),                     // triangle {1,2,3}
+      (2L, 3L), (2L, 4L), (3L, 4L), (3L, 5L), (4L, 5L), (4L, 6L), // tail 3-4-5-6
+      (5L, 10L), (5L, 20L), (5L, 30L))                  // triangle {10,20,30}
+    val one = java.nio.file.Files.createTempDirectory("graft-conv-1").toString
+    val three = java.nio.file.Files.createTempDirectory("graft-conv-3").toString
+    write(one, base)
+    write(three, (0 until 3).flatMap(i => base.map { case (ok, p) => (ok + 1000L * i, p + 1000L * i) }))
+    def run(dir: String) = {
+      val (labels, lpaRounds) = ext.Graph.convergedLabelProp(spark, dir)
+      val sizes = labels.groupBy($"label").count().select($"count").as[Long].collect().sorted.toSeq
+      val (core, coreRounds) = ext.Graph.kcoreFixpoint(spark, dir, k = 2)
+      (lpaRounds, sizes, coreRounds, core.count())
+    }
+    val (lpa1, sizes1, core1, coreN1) = run(one)
+    val (lpa3, sizes3, core3, coreN3) = run(three)
+    assert(lpa1 > 1 && lpa1 < 50) // converged, after more than one round
+    assert(core1 === 4)           // peels 6, then 5, then 4; round 4 proves it
+    assert(lpa3 === lpa1)
+    assert(core3 === core1)
+    assert(sizes3 === sizes1.flatMap(n => Seq(n, n, n)).sorted)
+    assert(sizes3.sum === 3 * sizes1.sum)
+    assert(coreN3 === 3 * coreN1)
+  }
+
   test("kcoreFixpoint: proves the fixpoint the fixed-round query only approaches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-kcore-fix").toString
     // same cascade graph as the x73 crafted test: rounds 1-2 peel, round

@@ -10,9 +10,14 @@ values. Values are compared exactly (the engine is designed for
 bit-identical doubles via decimal-exact aggregation) and, as a
 diagnostic, with 1e-9 relative tolerance — so a report distinguishes
 "hash-identical", "approximately right", and "wrong".
+
+Every entry of the Verify run's _failures.json (a query that threw)
+counts as FAIL. Only a query absent from both the outputs and the
+failures file counts as filtered out of a name-filtered Verify run.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -33,8 +38,16 @@ def main(out_dir, sf_dir):
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     n_exact = n_approx = n_fail = 0
-    import os
+    failed = set()
+    if os.path.exists(f"{out_dir}/_failures.json"):
+        with open(f"{out_dir}/_failures.json") as f:
+            for e in json.load(f):
+                print(f"FAIL {e['name']}: Verify raised {e['class']}: {e['message']}")
+                failed.add(e["name"])
+                n_fail += 1
     for name in sorted(oracle):
+        if name in failed:
+            continue
         if not os.path.isdir(f"{out_dir}/{name}"):
             continue  # filtered Verify run: only check dumped queries
         try:
